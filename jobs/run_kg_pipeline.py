@@ -61,42 +61,11 @@ def main(argv: list[str] | None = None) -> dict:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from src_to_kb_spark.operators.canonicalize import (
-        connected_components,
-        incremental_components,
-    )
-    from src_to_kb_spark.operators.chunker import chunk_documents
-    from src_to_kb_spark.operators.dedup import (
-        band_signature_rows,
-        candidate_pairs_from_bands,
-        candidate_pairs_involving,
-        verify_candidate_pairs,
-    )
-    from src_to_kb_spark.operators.extract import (
-        MAX_FILE_SIZE,
-        extract_pages,
-    )
-    from src_to_kb_spark.operators.linking import link_mentions
-    from src_to_kb_spark.operators.mentions import detect_mentions
-    from src_to_kb_spark.operators.triples import (
-        build_triples,
-        chunk_triples,
-        doc_triples,
-        mention_triples,
-        same_as_triples,
-    )
-    from src_to_kb_spark.runtime.checkpoint import (
-        IcebergFormat,
-        ParquetFormat,
-        is_committed,
-        read_stage,
-        resume_delta,
-        run_metrics,
-        write_stage,
-    )
-    from src_to_kb_spark.runtime.skew import salted_repartition
+    from src_to_kb_spark import pipeline
+    from src_to_kb_spark.operators import canonicalize
+    from src_to_kb_spark.operators.extract import MAX_FILE_SIZE
+    from src_to_kb_spark.runtime import checkpoint as ckpt
     from src_to_kb_spark.session import get_spark
-    from src_to_kb_spark.sources.gazetteer import gazetteer_df
     from src_to_kb_spark.sources.pages import load_pages
 
     # Under spark-submit a session already exists; reuse its conf.
@@ -111,9 +80,20 @@ def main(argv: list[str] | None = None) -> dict:
     # commit marker records the committed snapshot id (north_star:
     # "resumes from the last committed Iceberg snapshot checkpoint").
     fmt = (
-        IcebergFormat(spark, args.table_prefix)
-        if args.table_format == "iceberg" else ParquetFormat(args.output)
+        ckpt.IcebergFormat(spark, args.table_prefix)
+        if args.table_format == "iceberg"
+        else ckpt.ParquetFormat(args.output)
     )
+
+    # the stage store, looked up on the checkpoint module at call time
+    def committed(name):
+        return ckpt.is_committed(args.output, name)
+
+    def write(df, name, **kw):
+        ckpt.write_stage(df, args.output, name, fmt=fmt, **kw)
+
+    def read(name):
+        return ckpt.read_stage(spark, args.output, name, fmt=fmt)
 
     # Untrusted-input precondition: every downstream triple part is
     # (subj, pred, obj)-unique ONLY for unique urls (operators/
@@ -248,29 +228,19 @@ def main(argv: list[str] | None = None) -> dict:
 
     # -- stage: documents (resume unit = url) ------------------------------
     docs_delta = None  # extracted rows appended this run, if resuming
-    if is_committed(args.output, "documents"):
-        delta = resume_delta(pages, spark, args.output, "documents", fmt=fmt)
+    if committed("documents"):
+        delta = ckpt.resume_delta(pages, spark, args.output, "documents",
+                                  fmt=fmt)
         if delta.limit(1).count() > 0:
-            docs_new = extract_pages(
-                salted_repartition(
-                    delta, n_partitions=spark.sparkContext.defaultParallelism
-                )
-            ).localCheckpoint()
+            docs_delta = pipeline.documents_of(delta).localCheckpoint()
             # pending marker BEFORE the append: from here until all
             # downstream stages reconcile, a crash must invalidate them
             with open(pending_marker, "w") as f:
                 f.write("reconciling documents delta")
-            write_stage(docs_new, args.output, "documents", mode="append",
-                        fmt=fmt)
-            docs_delta = docs_new
+            write(docs_delta, "documents", mode="append")
     else:
-        docs_all = extract_pages(
-            salted_repartition(
-                pages, n_partitions=spark.sparkContext.defaultParallelism
-            )
-        )
-        write_stage(docs_all, args.output, "documents", fmt=fmt)
-    documents = read_stage(spark, args.output, "documents", fmt=fmt)
+        write(pipeline.documents_of(pages), "documents")
+    documents = read("documents")
 
     # -- resume semantics for downstream stages ----------------------------
     # A documents delta invalidates every committed downstream result.
@@ -288,27 +258,23 @@ def main(argv: list[str] | None = None) -> dict:
     # off below, but the parquet labels stay on disk and are exactly
     # the pre-delta fixpoint — a crash mid-delta re-enters through the
     # _delta_pending invalidation above, which also clears the seed.
-    components_seed_ok = docs_delta is not None and is_committed(
-        args.output, "components"
-    )
+    components_seed_ok = docs_delta is not None and committed("components")
     if docs_delta is not None:
         invalidate(("components", "triples"))
 
     # -- downstream stages (each committed-or-computed) --------------------
-    gaz = gazetteer_df(spark)
-
-    def stage(name, make, partition_by=None, make_delta=None):
-        if not is_committed(args.output, name):
-            write_stage(make(), args.output, name,
-                        partition_by=partition_by, fmt=fmt)
-        elif docs_delta is not None and make_delta is not None:
-            # per-document stage: exact delta propagation (append rows
-            # derived from the new documents only)
-            write_stage(
-                make_delta(docs_delta), args.output, name, mode="append",
-                partition_by=partition_by, fmt=fmt,
-            )
-        return read_stage(spark, args.output, name, fmt=fmt)
+    def stage(name, build, per_doc=False, partition_by=None):
+        """Commit ``name`` if it is not committed.  A per-document
+        stage is ``build`` applied to the documents; on resume it
+        propagates the delta exactly by appending ``build(delta)``.
+        Any other stage is ``build()``."""
+        if not committed(name):
+            write(build(documents) if per_doc else build(), name,
+                  partition_by=partition_by)
+        elif per_doc and docs_delta is not None:
+            write(build(docs_delta), name, mode="append",
+                  partition_by=partition_by)
+        return read(name)
 
     # chunks, mention-linking, and near-dup→components are independent
     # given the committed documents table — submit their stage writes
@@ -319,18 +285,12 @@ def main(argv: list[str] | None = None) -> dict:
     def mk_chunks():
         return stage(
             "chunks",
-            lambda: chunk_documents(documents, args.chunk_size, args.overlap),
-            make_delta=lambda d: chunk_documents(
-                d, args.chunk_size, args.overlap
-            ),
+            lambda d: pipeline.chunks_of(d, args.chunk_size, args.overlap),
+            per_doc=True,
         )
 
     def mk_linked():
-        return stage(
-            "linked",
-            lambda: link_mentions(detect_mentions(documents, gaz), gaz),
-            make_delta=lambda d: link_mentions(detect_mentions(d, gaz), gaz),
-        )
+        return stage("linked", pipeline.linked_of, per_doc=True)
 
     def mk_components():
         from src_to_kb_spark.operators.dedup import BANDS_SCHEME
@@ -345,29 +305,21 @@ def main(argv: list[str] | None = None) -> dict:
         if os.path.exists(scheme_path):
             with open(scheme_path) as f:
                 prev_scheme = f.read().strip()
-        if is_committed(args.output, "bands") and prev_scheme != BANDS_SCHEME:
+        if committed("bands") and prev_scheme != BANDS_SCHEME:
             invalidate(("bands", "neardup_pairs", "components", "triples"))
 
         # bands stage table: 2 short strings per doc — per-document, so
         # it delta-appends like chunks/linked
-        bands = stage(
-            "bands",
-            lambda: band_signature_rows(documents),
-            make_delta=band_signature_rows,
-        )
+        bands = stage("bands", pipeline.bands_of, per_doc=True)
         with open(scheme_path, "w") as f:
             f.write(BANDS_SCHEME)
         delta_pairs = None
-        if not is_committed(args.output, "neardup_pairs"):
-            write_stage(
-                verify_candidate_pairs(
-                    documents,
-                    candidate_pairs_from_bands(bands),
-                    threshold=args.neardup_threshold,
+        if not committed("neardup_pairs"):
+            write(
+                pipeline.pairs_from_bands(
+                    documents, bands, args.neardup_threshold
                 ),
-                args.output,
                 "neardup_pairs",
-                fmt=fmt,
             )
         elif docs_delta is not None:
             # incremental near-dup: every NEW pair has ≥1 delta member
@@ -378,20 +330,14 @@ def main(argv: list[str] | None = None) -> dict:
             # localCheckpoint: the incremental-components path below
             # re-reads these rows; without it the verify join would
             # re-run per consumer.
-            delta_keys = docs_delta.select(F.col("url").alias("key"))
-            delta_bands = bands.join(delta_keys, "key", "left_semi")
-            delta_pairs = verify_candidate_pairs(
-                documents,
-                candidate_pairs_involving(delta_bands, bands),
-                threshold=args.neardup_threshold,
+            delta_pairs = pipeline.pairs_from_bands(
+                documents, bands, args.neardup_threshold,
+                delta_keys=docs_delta.select(F.col("url").alias("key")),
             ).localCheckpoint()
-            write_stage(
-                delta_pairs, args.output, "neardup_pairs", mode="append",
-                fmt=fmt,
-            )
-        pairs = read_stage(spark, args.output, "neardup_pairs", fmt=fmt)
+            write(delta_pairs, "neardup_pairs", mode="append")
+        pairs = read("neardup_pairs")
         if (
-            not is_committed(args.output, "components")
+            not committed("components")
             and components_seed_ok
             and delta_pairs is not None
         ):
@@ -399,13 +345,12 @@ def main(argv: list[str] | None = None) -> dict:
             # the delta pairs, iterate over O(delta) edges only.  The
             # eager checkpoint materializes the result BEFORE the
             # overwrite of the table it was read from.
-            seed = read_stage(spark, args.output, "components", fmt=fmt)
-            updated = incremental_components(
-                seed, delta_pairs
+            updated = canonicalize.incremental_components(
+                read("components"), delta_pairs
             ).localCheckpoint()
-            write_stage(updated, args.output, "components", fmt=fmt)
+            write(updated, "components")
         return pairs, stage(
-            "components", lambda: connected_components(pairs)
+            "components", lambda: canonicalize.connected_components(pairs)
         )
 
     with ThreadPoolExecutor(max_workers=3) as ex:
@@ -419,12 +364,7 @@ def main(argv: list[str] | None = None) -> dict:
     # (e.g. all same_as edges) scans one directory, not the table
     triples = stage(
         "triples",
-        lambda: build_triples(
-            doc_triples(documents),
-            mention_triples(linked),
-            same_as_triples(components),
-            chunk_triples(chunks),
-        ),
+        lambda: pipeline.triples_of(documents, linked, components, chunks),
         partition_by=["pred"],
     )
     # every downstream stage is now consistent with the appended delta
@@ -438,7 +378,7 @@ def main(argv: list[str] | None = None) -> dict:
         "neardup_pairs": pairs.count(),
         "components": components.count(),
         "triples": triples.count(),
-        "stages": run_metrics(args.output),
+        "stages": ckpt.run_metrics(args.output),
     }
     with open(os.path.join(args.output, "summary.json"), "w") as f:
         json.dump(summary, f, indent=1)

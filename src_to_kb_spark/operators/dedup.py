@@ -215,18 +215,6 @@ def make_band_hash_udf():
     return bf_udf
 
 
-def make_shingle_set_udf():
-    """pandas UDF: text -> array<string> distinct 3-shingles — run only
-    over candidate-pair members during verification."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def sh_udf(text: pd.Series) -> pd.Series:
-        return text.map(shingle_py)
-
-    return sh_udf
-
-
 def shingle_hashes_py(text: str) -> list[int]:
     """Sorted distinct signed-int64 md5-prefix hashes of the 3-token
     shingles.  ~3× narrower than the string arrays through shuffle and

@@ -265,26 +265,3 @@ def _empty_chunks(spark: SparkSession) -> DataFrame:
         "doc_uid string, chunk_id string, chunk_index int, content string,"
         " start_line int, end_line int",
     )
-
-
-def upload_kb(
-    spark: SparkSession,
-    kb_dir: str,
-    sender_factory: Callable[[], Callable[[dict], Any]],
-    **kw,
-) -> dict:
-    """CLI-shaped entry: read the three stage tables from a pipeline
-    --output dir (documents always; chunks/embeddings when committed —
-    upload.js:44-97 loads whatever exists) and run :func:`upload`."""
-    from ..runtime.checkpoint import is_committed, read_stage
-
-    documents = read_stage(spark, kb_dir, "documents")
-    chunks = (
-        read_stage(spark, kb_dir, "chunks")
-        if is_committed(kb_dir, "chunks") else None
-    )
-    embeddings = (
-        read_stage(spark, kb_dir, "embeddings")
-        if is_committed(kb_dir, "embeddings") else None
-    )
-    return upload(spark, documents, chunks, embeddings, sender_factory, **kw)

@@ -257,11 +257,14 @@ def test_job_rebuilds_neardup_on_bands_scheme_change(spark, tmp_path):
     # simulate a KB written under an older scheme, then grow the input
     with open(scheme_path, "w") as f:
         f.write("mh-legacy-halves")
-    bands_mtime = os.path.getmtime(os.path.join(out, "_committed_bands"))
+    # a rebuild rewrites the marker, replacing this sentinel content
+    bands_marker = os.path.join(out, "_committed_bands")
+    with open(bands_marker, "w") as f:
+        f.write("sentinel")
     src.write.mode("overwrite").parquet(f"{inp}/documents.parquet")
     s2 = main(["--input", inp, "--output", out])
     assert open(scheme_path).read() == BANDS_SCHEME
-    assert os.path.getmtime(os.path.join(out, "_committed_bands")) > bands_mtime
+    assert open(bands_marker).read() != "sentinel"
 
     out_ref = str(tmp_path / "kb_ref")
     s3 = main(["--input", inp, "--output", out_ref])
@@ -360,3 +363,46 @@ def test_job_incremental_components_on_delta(spark, tmp_path, monkeypatch):
         for r in spark.read.parquet(os.path.join(o, "components")).collect()
     }
     assert comp(out) == comp(out_ref)
+
+
+def test_job_and_run_pipeline_give_the_same_triples(spark, tmp_path):
+    """The job (through the stage store) and run_pipeline (in memory)
+    compose the same stage graph, so at the job's near-dup threshold
+    their triples are equal — after a cold build and after a resume
+    that adds 5% of the docs, one member of every fifth near-dup
+    cluster, so the delta joins committed components."""
+    from pyspark.sql import functions as F
+
+    from src_to_kb_spark.pipeline import run_pipeline
+    from src_to_kb_spark.runtime.checkpoint import read_stage
+    from src_to_kb_spark.sources.pages import (
+        load_pages,
+        synthetic_pages_distributed,
+    )
+
+    def digest(triples):
+        row = triples.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64("subj", "pred", "obj").cast("decimal(38,0)"))
+            .alias("h"),
+            F.sum(F.when(F.col("pred") == "same_as", 1).otherwise(0))
+            .alias("same_as"),
+        ).first()
+        return row["n"], row["h"], row["same_as"]
+
+    corpus = synthetic_pages_distributed(spark, 320, n_partitions=4)
+    in_delta = F.regexp_extract("url", r"/p(\d+)", 1).cast("int") % 20 == 3
+    inp = str(tmp_path / "pages")
+    out = str(tmp_path / "kb")
+    for pages, n_docs in ((corpus.filter(~in_delta), 304), (corpus, 320)):
+        pages.write.mode("overwrite").parquet(inp)
+        summary = main(["--input", inp, "--output", out])
+        assert summary["documents"] == n_docs
+        job = digest(read_stage(spark, out, "triples"))
+        res = run_pipeline(
+            spark, load_pages(spark, inp, keep_keys=False),
+            neardup_threshold=0.8,
+        )
+        assert job == digest(res.triples)
+        res.documents.unpersist()
+        assert job[2] > 0  # near-dup pairs reached the triples

@@ -327,22 +327,28 @@ def test_job_param_change_invalidates_derived_stages(spark, tmp_path):
     job_main(["--input", inp, "--output", out,
               "--neardup-threshold", "0.9"])
 
-    def mtime(stage):
-        return os.path.getmtime(os.path.join(out, f"_committed_{stage}"))
+    # a rebuilt stage rewrites its marker: sentinel content written
+    # before a re-run survives only where nothing was rebuilt
+    def mark(*stages):
+        for stage in stages:
+            with open(os.path.join(out, f"_committed_{stage}"), "w") as f:
+                f.write("sentinel")
 
-    t_pairs, t_linked, t_chunks = (
-        mtime("neardup_pairs"), mtime("linked"), mtime("chunks")
-    )
+    def rebuilt(stage):
+        with open(os.path.join(out, f"_committed_{stage}")) as f:
+            return f.read() != "sentinel"
+
+    mark("neardup_pairs", "linked", "chunks")
     job_main(["--input", inp, "--output", out,
               "--neardup-threshold", "0.1"])
     # near-dup family rebuilt under the new threshold...
-    assert mtime("neardup_pairs") > t_pairs
+    assert rebuilt("neardup_pairs")
     # ...while threshold-independent stages resumed untouched
-    assert mtime("linked") == t_linked and mtime("chunks") == t_chunks
+    assert not rebuilt("linked") and not rebuilt("chunks")
     with open(os.path.join(out, "_scheme_params")) as f:
         assert json.load(f)["neardup_threshold"] == 0.1
     # identical-params rerun: nothing rebuilds
-    t_pairs2 = mtime("neardup_pairs")
+    mark("neardup_pairs")
     job_main(["--input", inp, "--output", out,
               "--neardup-threshold", "0.1"])
-    assert mtime("neardup_pairs") == t_pairs2
+    assert not rebuilt("neardup_pairs")

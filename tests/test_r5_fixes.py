@@ -100,7 +100,9 @@ def test_flag_regressions_threshold_floor_and_driver_shape():
     """The drift tripwire reads the driver-shaped BENCH_r{N}.json
     (queries under parsed.queries), flags >1.25x ratios, and requires
     a >0.25 s absolute delta so sub-second queries at the scheduler
-    noise floor (50 ms jitter on a 0.1 s query) don't cry wolf."""
+    noise floor (50 ms jitter on a 0.1 s query) don't cry wolf.  It
+    is called with the latest round's own cpus and sf, so that round
+    is the comparable baseline."""
     import json
     import os
 
@@ -120,14 +122,44 @@ def test_flag_regressions_threshold_floor_and_driver_shape():
     small = min(prev, key=prev.get)    # noise-floor query
     assert prev[small] < 1.0 <= prev[big]
 
+    stamp = doc.get("parsed") or doc
+    cpus, sf = stamp["cpus"], stamp["sf"]
+
     out = bench._flag_regressions({
         big: prev[big] * 1.5,          # ratio and delta both trip
         small: prev[small] * 1.5,      # ratio trips, delta is noise
-    })
+    }, cpus, sf)
     assert out["baseline"] == rounds[-1]
     assert big in out["flagged"] and small not in out["flagged"]
     assert out["flagged"][big]["ratio"] == 1.5
 
     # within-threshold walls never flag regardless of magnitude
-    out2 = bench._flag_regressions({big: prev[big] * 1.2})
+    out2 = bench._flag_regressions({big: prev[big] * 1.2}, cpus, sf)
     assert out2["flagged"] == {}
+
+
+def test_flag_regressions_needs_a_comparable_baseline():
+    """A 4-core sweep is never judged against the 32-core BENCH_r05:
+    with no recorded round at the sweep's own cpus and sf the tripwire
+    names no baseline and flags nothing, however slow the sweep."""
+    import json
+    import os
+
+    import bench
+
+    here = os.path.dirname(os.path.abspath(bench.__file__))
+    with open(os.path.join(here, "BENCH_r05.json")) as f:
+        doc = json.load(f)
+    assert doc["cpus"] == 32 and doc["parsed"]["cpus"] == 32
+    prev = doc["parsed"]["queries"]
+    slow = {name: 10 * secs + 1 for name, secs in prev.items()}
+
+    for cpus, sf in ((4, doc["parsed"]["sf"]), (32, "sf1")):
+        out = bench._flag_regressions(slow, cpus, sf)
+        assert out["baseline"] is None, (cpus, sf, out)
+        assert out["reason"] == "no comparable baseline"
+        assert out["flagged"] == {}
+
+    # the driver's scalar sf and the sweep's sf path name one scale
+    same = bench._flag_regressions(slow, 32, doc["sf"])
+    assert same["baseline"] is not None and same["flagged"]

@@ -222,23 +222,31 @@ def test_job_table_layer_change_invalidates_everything(spark, tmp_path):
         params = json.load(f)
     assert params["table_format"] == "parquet"
 
-    def mtime(stage):
-        return os.path.getmtime(os.path.join(out, f"_committed_{stage}"))
+    # a rebuilt stage rewrites its marker: sentinel content written
+    # before a re-run survives only where nothing was rebuilt
+    def mark(*stages):
+        for stage in stages:
+            with open(os.path.join(out, f"_committed_{stage}"), "w") as f:
+                f.write("sentinel")
+
+    def rebuilt(stage):
+        with open(os.path.join(out, f"_committed_{stage}")) as f:
+            return f.read() != "sentinel"
 
     # pre-round-5 sidecar (no format keys) == parquet era: no rebuild
     legacy = {k: v for k, v in params.items()
               if k not in ("table_format", "table_prefix")}
     with open(params_path, "w") as f:
         json.dump(legacy, f)
-    t_docs, t_triples = mtime("documents"), mtime("triples")
+    mark("documents", "triples")
     job_main(["--input", inp, "--output", out])
-    assert mtime("documents") == t_docs and mtime("triples") == t_triples
+    assert not rebuilt("documents") and not rebuilt("triples")
 
     # sidecar claiming a DIFFERENT layer: everything rebuilds
     with open(params_path, "w") as f:
         json.dump({**params, "table_format": "iceberg",
                    "table_prefix": "kb.other"}, f)
     job_main(["--input", inp, "--output", out])
-    assert mtime("documents") > t_docs and mtime("triples") > t_triples
+    assert rebuilt("documents") and rebuilt("triples")
     with open(params_path) as f:
         assert json.load(f)["table_format"] == "parquet"
