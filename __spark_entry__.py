@@ -162,26 +162,17 @@ def _input_fingerprint(path: str) -> str:
     return h.hexdigest()
 
 
-def _stage_cache_dir(
-    sf_dir: str, kind: str, src_name: str = "documents.parquet",
-    scheme: str = "",
-) -> str:
-    """Shared tmp cache location keyed on (kind, sf_dir, input CONTENT
-    fingerprint, builder SCHEME) — stale iff the driver regenerates
-    the testdata (even when regeneration preserves the mtime) OR the
-    stage's builder parameters change.  ``src_name`` must be the table
-    the stage is BUILT from (the ANN table derives from
-    embeddings.parquet: hashing documents.parquet there would serve a
-    stale cache when only the embeddings change).  ``scheme`` is the
-    builder-parameter signature (e.g. the ANN table's bit/centroid
-    counts): without it a committed table built by OLD code would be
-    served to NEW probe code — the same hazard the pipeline job guards
-    with its ``_scheme_*`` files."""
+def _stage_cache_dir(sf_dir: str, kind: str, scheme: str = "") -> str:
+    """Tmp work dir of a streaming drain over ``sf_dir``'s pages, keyed
+    on (kind, sf_dir, documents.parquet CONTENT fingerprint, builder
+    SCHEME).  A Structured Streaming checkpoint and its sink are bound
+    to the input they drained, so a regenerated corpus (even one that
+    keeps the mtime) or a new scheme drains into a fresh dir."""
     import hashlib
     import os
     import tempfile
 
-    src = os.path.join(sf_dir, src_name)
+    src = os.path.join(sf_dir, "documents.parquet")
     tag = f"{kind}|{scheme}|{sf_dir}|{_input_fingerprint(src)}"
     return os.path.join(
         tempfile.gettempdir(),
@@ -190,12 +181,45 @@ def _stage_cache_dir(
     )
 
 
-def _committed_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The chunks STAGE TABLE for ``sf_dir`` — computed once, committed
-    to a cache dir keyed on (sf_dir, input mtime), then served from the
-    parquet scan.  This is the real serving shape at 100 TB: search
-    queries hit the committed table, not an extract+chunk recompute
-    per invocation."""
+# The driver's committed serving tables: stage -> (the sf table it is
+# BUILT from, builder scheme).  A table's resume identity is its scheme
+# plus that input's content fingerprint, so it rebuilds when either
+# changes — and only then (the ANN table ignores a documents change).
+_SERVING = {
+    "chunks": ("documents.parquet", "chunk:size=1000,overlap=200"),
+    "ann": ("embeddings.parquet", "ann:dim=64,n_bits=4,n_centroids=8"),
+}
+
+
+def _serving_root(sf_dir: str) -> str:
+    import hashlib
+    import os
+    import tempfile
+
+    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()
+    return os.path.join(tempfile.gettempdir(), "src_to_kb_stage_cache",
+                        f"sf_{key}")
+
+
+def _serving_identity(sf_dir: str, stage: str) -> dict:
+    import os
+
+    src, scheme = _SERVING[stage]
+    return {
+        "scheme": scheme,
+        "input": _input_fingerprint(os.path.join(sf_dir, src)),
+    }
+
+
+def _serving_table(
+    spark: SparkSession, sf_dir: str, stage: str,
+    build: Callable[[], DataFrame], partition_by: list[str] | None = None,
+) -> DataFrame:
+    """``stage``'s serving table for ``sf_dir``: built once, committed
+    under its identity in the sf dir's one cache root, then served from
+    the committed table (runtime/checkpoint.py decides reuse).  This is
+    the real serving shape at 100 TB: queries hit the committed table,
+    not a recompute per invocation."""
     import os
 
     from src_to_kb_spark.runtime.checkpoint import (
@@ -204,15 +228,21 @@ def _committed_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_stage,
     )
 
-    base = _stage_cache_dir(
-        sf_dir, "chunks", scheme="chunk:size=1000,overlap=200"
-    )
-    if not is_committed(base, "chunks"):
+    base = _serving_root(sf_dir)
+    identity = _serving_identity(sf_dir, stage)
+    if not is_committed(base, stage, identity):
         os.makedirs(base, exist_ok=True)
-        write_stage(
-            chunk_documents(_docs(spark, sf_dir), 1000, 200), base, "chunks"
-        )
-    return read_stage(spark, base, "chunks")
+        write_stage(build(), base, stage, partition_by=partition_by,
+                    identity=identity)
+    return read_stage(spark, base, stage)
+
+
+def _committed_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The chunks STAGE TABLE for ``sf_dir``."""
+    return _serving_table(
+        spark, sf_dir, "chunks",
+        lambda: chunk_documents(_docs(spark, sf_dir), 1000, 200),
+    )
 
 
 def _committed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,28 +253,14 @@ def _committed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     hive partitioning (lsh_bucket=<b>/ivf_list=<l>/) serves both
     families from ONE copy of the vectors: an lsh probe prunes at the
     first directory level, an ivf probe at the second."""
-    import os
-
-    from src_to_kb_spark.runtime.checkpoint import (
-        is_committed,
-        read_stage,
-        write_stage,
+    return _serving_table(
+        spark, sf_dir, "ann",
+        lambda: build_ann_table(
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
+            dim=64, n_bits=4, n_centroids=8,
+        ),
+        partition_by=["lsh_bucket", "ivf_list"],
     )
-
-    base = _stage_cache_dir(
-        sf_dir, "ann", src_name="embeddings.parquet",
-        scheme="ann:dim=64,n_bits=4,n_centroids=8",
-    )
-    if not is_committed(base, "ann"):
-        os.makedirs(base, exist_ok=True)
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        write_stage(
-            build_ann_table(emb, dim=64, n_bits=4, n_centroids=8),
-            base,
-            "ann",
-            partition_by=["lsh_bucket", "ivf_list"],
-        )
-    return read_stage(spark, base, "ann")
 
 
 # --------------------------------------------------------------------------

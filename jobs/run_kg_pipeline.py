@@ -15,8 +15,13 @@ Each stage writes its own parquet table under --output with a
 (``_metrics_<stage>.json``).  Re-running with the same --output resumes:
 committed stages are re-read, uncommitted input keys are recomputed via
 anti-join (north_rule: "resumable from checkpoint with per-partition
-lineage + metrics").  Resume cost is O(delta), not O(corpus): per-doc
-stages (documents, chunks, linked, bands) append rows derived from the
+lineage + metrics").  A stage counts as committed only under the
+identity it was built with, which its metrics sidecar records: the
+table layer plus the parameters of every stage it derives from.  So
+--chunk-size/--overlap rebuild chunks and triples, --neardup-threshold
+or a new band scheme the near-dup family, and --table-format/
+--table-prefix every stage.  Resume cost is O(delta), not O(corpus):
+per-doc stages (documents, chunks, linked, bands) append rows derived from the
 new docs only, near-dup pairs come from joining the delta's bands
 against the committed bands table, and only the genuinely global
 stages — components (over the small pair table) and triples (map-only
@@ -62,7 +67,7 @@ def main(argv: list[str] | None = None) -> dict:
     from pyspark.sql import functions as F
 
     from src_to_kb_spark import pipeline
-    from src_to_kb_spark.operators import canonicalize
+    from src_to_kb_spark.operators import canonicalize, dedup
     from src_to_kb_spark.operators.extract import MAX_FILE_SIZE
     from src_to_kb_spark.runtime import checkpoint as ckpt
     from src_to_kb_spark.session import get_spark
@@ -75,7 +80,7 @@ def main(argv: list[str] | None = None) -> dict:
     )
     os.makedirs(args.output, exist_ok=True)
     # Physical table layer: --output always holds the control plane
-    # (markers/metrics/params sidecars); the stage DATA lives either in
+    # (markers/metrics/identity sidecars); the stage DATA lives either in
     # parquet dirs under it (default) or in Iceberg tables, where every
     # commit marker records the committed snapshot id (north_star:
     # "resumes from the last committed Iceberg snapshot checkpoint").
@@ -85,12 +90,32 @@ def main(argv: list[str] | None = None) -> dict:
         else ckpt.ParquetFormat(args.output)
     )
 
+    # Resume identity of each stage: what it is built from, following
+    # the stage graph — a committed stage is reused only under an equal
+    # identity (runtime/checkpoint.py is_committed), so a parameter
+    # change rebuilds exactly the stages derived from it.  The physical
+    # layer heads every identity: a parquet run's marker says nothing
+    # about Iceberg tables under a prefix, and vice versa.
+    layer = {"table_format": args.table_format}
+    if args.table_format == "iceberg":
+        layer["table_prefix"] = args.table_prefix
+    chunk_id = {**layer, "chunk_size": args.chunk_size,
+                "overlap": args.overlap}
+    bands_id = {**layer, "bands_scheme": dedup.BANDS_SCHEME}
+    pairs_id = {**bands_id, "neardup_threshold": args.neardup_threshold}
+    ids = {
+        "documents": layer, "chunks": chunk_id, "linked": layer,
+        "bands": bands_id, "neardup_pairs": pairs_id,
+        "components": pairs_id, "triples": {**chunk_id, **pairs_id},
+    }
+
     # the stage store, looked up on the checkpoint module at call time
     def committed(name):
-        return ckpt.is_committed(args.output, name)
+        return ckpt.is_committed(args.output, name, ids[name])
 
     def write(df, name, **kw):
-        ckpt.write_stage(df, args.output, name, fmt=fmt, **kw)
+        ckpt.write_stage(df, args.output, name, fmt=fmt,
+                         identity=ids[name], **kw)
 
     def read(name):
         return ckpt.read_stage(spark, args.output, name, fmt=fmt)
@@ -142,9 +167,7 @@ def main(argv: list[str] | None = None) -> dict:
 
     def invalidate(stages):
         for st in stages:
-            marker = os.path.join(args.output, f"_committed_{st}")
-            if os.path.exists(marker):
-                os.remove(marker)
+            ckpt.uncommit(args.output, st)
 
     # Crash recovery: a `_delta_pending` marker means a previous run
     # died between appending a documents delta and reconciling the
@@ -157,80 +180,11 @@ def main(argv: list[str] | None = None) -> dict:
         invalidate(DOWNSTREAM)
         os.remove(pending_marker)
 
-    # Stage PARAMETERS are part of the resume identity, exactly like
-    # the band scheme below: a committed chunks table built with
-    # --chunk-size 1000 is NOT the answer to a --chunk-size 500 run,
-    # and a 0.8-threshold pair table silently masquerading as the 0.6
-    # result would drop every 0.6 ≤ j < 0.8 pair from components and
-    # same_as triples.  Record the params; on mismatch invalidate the
-    # stages derived from the changed ones (documents is
-    # parameter-independent and always survives).
-    params = {
-        "chunk_size": args.chunk_size,
-        "overlap": args.overlap,
-        "neardup_threshold": args.neardup_threshold,
-        # The PHYSICAL table layer is part of the identity too: a
-        # _committed_documents marker written by a parquet run says
-        # nothing about the state of Iceberg tables under
-        # --table-prefix (and vice versa) — trusting it would resume
-        # against a different table layer's contents or crash with
-        # TABLE_OR_VIEW_NOT_FOUND deep inside resume_delta.
-        "table_format": args.table_format,
-        "table_prefix": args.table_prefix,
-    }
-    params_path = os.path.join(args.output, "_scheme_params")
-    prev_params = {}
-    if os.path.exists(params_path):
-        with open(params_path) as f:
-            prev_params = json.load(f)
-    if prev_params and prev_params != params:
-        stale = set()
-        # Pre-format-era params files lack the format keys; the KB's
-        # actual layer is still knowable from marker CONTENT (Iceberg
-        # markers carry 'snapshot=<id>', parquet markers a timestamp) —
-        # inferring it avoids both spuriously rebuilding a legacy
-        # iceberg KB resumed with matching args and silently trusting
-        # its markers under a parquet rerun.  A legacy iceberg sidecar
-        # stored no prefix, so the caller's is assumed (resume-with-
-        # same-args, the only recoverable case).  The prefix otherwise
-        # participates only under iceberg (parquet ignores it).
-        def _layer(p):
-            f = p.get("table_format")
-            if f is None:
-                try:
-                    with open(
-                        os.path.join(args.output, "_committed_documents")
-                    ) as fh:
-                        f = (
-                            "iceberg"
-                            if fh.read().startswith("snapshot=")
-                            else "parquet"
-                        )
-                except OSError:
-                    f = "parquet"
-            prefix = p.get("table_prefix", args.table_prefix)
-            return (f, prefix if f == "iceberg" else None)
-
-        if _layer(prev_params) != _layer(params):
-            stale |= {"documents", *DOWNSTREAM}
-        if (prev_params.get("chunk_size"), prev_params.get("overlap")) != (
-            params["chunk_size"], params["overlap"]
-        ):
-            stale |= {"chunks", "triples"}
-        if prev_params.get("neardup_threshold") != params[
-            "neardup_threshold"
-        ]:
-            stale |= {"neardup_pairs", "components", "triples"}
-        invalidate(sorted(stale))
-    os.makedirs(args.output, exist_ok=True)
-    with open(params_path, "w") as f:
-        json.dump(params, f)
-
     # -- stage: documents (resume unit = url) ------------------------------
     docs_delta = None  # extracted rows appended this run, if resuming
     if committed("documents"):
         delta = ckpt.resume_delta(pages, spark, args.output, "documents",
-                                  fmt=fmt)
+                                  fmt=fmt, identity=ids["documents"])
         if delta.limit(1).count() > 0:
             docs_delta = pipeline.documents_of(delta).localCheckpoint()
             # pending marker BEFORE the append: from here until all
@@ -293,26 +247,9 @@ def main(argv: list[str] | None = None) -> dict:
         return stage("linked", pipeline.linked_of, per_doc=True)
 
     def mk_components():
-        from src_to_kb_spark.operators.dedup import BANDS_SCHEME
-
-        # Committed bands are only delta-joinable against bands of the
-        # SAME signature scheme: a KB written by an older scheme would
-        # otherwise band-join with zero collisions and silently miss
-        # every cross-version near-dup pair.  Compare the recorded tag
-        # and rebuild the near-dup family on mismatch.
-        scheme_path = os.path.join(args.output, "_scheme_bands")
-        prev_scheme = None
-        if os.path.exists(scheme_path):
-            with open(scheme_path) as f:
-                prev_scheme = f.read().strip()
-        if committed("bands") and prev_scheme != BANDS_SCHEME:
-            invalidate(("bands", "neardup_pairs", "components", "triples"))
-
         # bands stage table: 2 short strings per doc — per-document, so
         # it delta-appends like chunks/linked
         bands = stage("bands", pipeline.bands_of, per_doc=True)
-        with open(scheme_path, "w") as f:
-            f.write(BANDS_SCHEME)
         delta_pairs = None
         if not committed("neardup_pairs"):
             write(

@@ -3,9 +3,13 @@
 per-partition lineage + metrics").
 
 Every pipeline stage writes to its own table; a ``_metrics`` sidecar
-records per-partition row counts and wall time, and a ``_committed``
-marker makes the write atomic-observable.  Restart = anti-join the
-committed keys.
+records per-partition row counts, wall time and the stage's resume
+IDENTITY (the parameters and inputs it was built under), and a
+``_committed`` marker makes the write atomic-observable.  A stage is
+reusable iff its marker exists AND its sidecar records the identity
+the caller asks for (:func:`is_committed`) — the one resume rule for
+the pipeline job and the driver's serving tables.  Restart =
+anti-join the committed keys.
 
 The PHYSICAL table layer is pluggable (:class:`ParquetFormat` /
 :class:`IcebergFormat`, ``--table-format`` on the pipeline job).  The
@@ -15,7 +19,7 @@ Iceberg deployment the same stages go through
 are snapshot-atomic in the catalog — and the ``_committed_<stage>``
 marker CONTENT becomes the committed snapshot id, so "resumes from the
 last committed Iceberg snapshot checkpoint" (BASELINE.json north_star)
-is literally the marker contract: the control flow (markers, params
+is literally the marker contract: the control flow (markers, identity
 sidecars, ``_delta_pending`` crash recovery) is identical across
 formats, only the bytes under the table ident change.
 
@@ -142,11 +146,20 @@ def write_stage(
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     fmt: ParquetFormat | IcebergFormat | None = None,
+    identity: dict | None = None,
 ) -> dict:
-    """Write a stage output + per-partition lineage metrics.
+    """Write a stage output + per-partition lineage metrics, and commit
+    it under ``identity`` (a JSON-able dict of whatever the stage was
+    built from; see :func:`is_committed`).
 
     Returns the metrics dict: {stage, wall_sec, n_rows, partitions:
-    [{partition_id, n_rows}, ...]}.
+    [{partition_id, n_rows}, ...], identity}.
+
+    An overwrite removes the stage's marker BEFORE it writes, so a crash
+    mid-write leaves the stage uncommitted under every identity — never
+    a marker over data half-rebuilt under another one.  An append
+    extends a stage committed under the same identity and keeps its
+    marker; the job's ``_delta_pending`` marker covers that window.
 
     ``mode='overwrite'`` reads the WRITTEN table back for the counts —
     O(what was just written).  ``mode='append'`` (the resume path's
@@ -157,6 +170,8 @@ def write_stage(
     the lineage of the increment, not the cumulative table.
     """
     fmt = fmt or ParquetFormat(out_dir)
+    if mode != "append":
+        uncommit(out_dir, stage)
     t0 = time.time()
     commit_ref = fmt.write(df, stage, mode=mode, partition_by=partition_by)
     wall = time.time() - t0
@@ -180,6 +195,7 @@ def write_stage(
              for r in per_part),
             key=lambda d: d["partition_id"],
         ),
+        "identity": identity,
     }
     with open(os.path.join(out_dir, f"_metrics_{stage}.json"), "w") as f:
         json.dump(metrics, f, indent=1)
@@ -190,8 +206,29 @@ def write_stage(
     return metrics
 
 
-def is_committed(out_dir: str, stage: str) -> bool:
-    return os.path.exists(os.path.join(out_dir, f"_committed_{stage}"))
+def is_committed(
+    out_dir: str, stage: str, identity: dict | None = None
+) -> bool:
+    """True iff ``stage`` is committed under ``identity``: its marker
+    exists and its sidecar records an equal identity.  A sidecar that
+    records a different identity, none at all, or cannot be read means
+    the stage must be rebuilt."""
+    if not os.path.exists(os.path.join(out_dir, f"_committed_{stage}")):
+        return False
+    try:
+        with open(os.path.join(out_dir, f"_metrics_{stage}.json")) as f:
+            recorded = json.load(f).get("identity")
+    except (OSError, ValueError):
+        return False
+    # compare in JSON form: tuples come back as lists
+    return recorded == json.loads(json.dumps(identity))
+
+
+def uncommit(out_dir: str, stage: str) -> None:
+    """Remove ``stage``'s marker: it is rebuilt by the next run."""
+    marker = os.path.join(out_dir, f"_committed_{stage}")
+    if os.path.exists(marker):
+        os.remove(marker)
 
 
 def read_stage(
@@ -205,12 +242,14 @@ def resume_delta(
     inputs: DataFrame, spark: SparkSession, out_dir: str, stage: str,
     key: str = "url",
     fmt: ParquetFormat | IcebergFormat | None = None,
+    identity: dict | None = None,
 ) -> DataFrame:
-    """Rows of ``inputs`` not yet present in the committed stage output
-    — the restart anti-join (left_anti keeps the big side map-local
-    when the committed key set is broadcastable; at scale this is a
-    shuffled anti-join on the key, which is exactly what we want)."""
-    if not is_committed(out_dir, stage):
+    """Rows of ``inputs`` not yet present in the stage output committed
+    under ``identity`` — the restart anti-join (left_anti keeps the big
+    side map-local when the committed key set is broadcastable; at
+    scale this is a shuffled anti-join on the key, which is exactly
+    what we want)."""
+    if not is_committed(out_dir, stage, identity):
         return inputs
     done = read_stage(spark, out_dir, stage, fmt=fmt).select(key).distinct()
     return inputs.join(done, on=key, how="left_anti")

@@ -9,7 +9,10 @@ A "KB" here is one ``jobs/run_kg_pipeline.py --output`` directory: its
 sidecars, ``_delta_pending`` crash marker, and ``summary.json`` fully
 determine the generation state, so status needs no live process — the
 property that matters when the "process" is a spark-submit on a
-cluster the API server cannot see.
+cluster the API server cannot see.  Status reports which markers
+exist; whether a run may REUSE a committed stage also depends on the
+resume identity its sidecar records, which only
+``is_committed`` in ``runtime/checkpoint.py`` decides.
 """
 
 from __future__ import annotations

@@ -205,7 +205,8 @@ def upload(
             ).first()[0]
             if dup_embedding_chunk_ids:
                 print(
-                    f"⚠️  {dup_embedding_chunk_ids} chunk_ids have "
+                    f"⚠️  {dup_embedding_chunk_ids} duplicated chunk_ids "
+                    "on sendable documents (counted per document) have "
                     "multiple embeddings; keeping the deterministic "
                     "max vector per chunk_id (the reference keeps the "
                     "last file-order write — no file order exists on "

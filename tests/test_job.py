@@ -223,7 +223,10 @@ def test_job_recovers_from_mid_reconcile_crash(spark, tmp_path):
     delta_docs = extract_pages(
         documents_to_pages(src.filter("doc_id >= 300"))
     )
-    write_stage(delta_docs, out, "documents", mode="append")
+    with open(os.path.join(out, "_metrics_documents.json")) as f:
+        identity = json.load(f)["identity"]
+    write_stage(delta_docs, out, "documents", mode="append",
+                identity=identity)
     with open(os.path.join(out, "_delta_pending"), "w") as f:
         f.write("crashed mid-reconcile")
 
@@ -238,7 +241,9 @@ def test_job_recovers_from_mid_reconcile_crash(spark, tmp_path):
     assert _triple_set(spark, out) == _triple_set(spark, out_ref)
 
 
-def test_job_rebuilds_neardup_on_bands_scheme_change(spark, tmp_path):
+def test_job_rebuilds_neardup_on_bands_scheme_change(
+    spark, tmp_path, monkeypatch
+):
     """A KB whose committed bands table was written by a DIFFERENT
     band-signature scheme must rebuild the near-dup family on resume:
     delta bands would band-join old-scheme rows with zero collisions
@@ -249,21 +254,23 @@ def test_job_rebuilds_neardup_on_bands_scheme_change(spark, tmp_path):
     out = str(tmp_path / "kb")
     main(["--input", inp, "--output", out])
 
-    from src_to_kb_spark.operators.dedup import BANDS_SCHEME
+    from src_to_kb_spark.operators import dedup
 
-    scheme_path = os.path.join(out, "_scheme_bands")
-    assert open(scheme_path).read() == BANDS_SCHEME
+    def bands_scheme():
+        with open(os.path.join(out, "_metrics_bands.json")) as f:
+            return json.load(f)["identity"]["bands_scheme"]
 
-    # simulate a KB written under an older scheme, then grow the input
-    with open(scheme_path, "w") as f:
-        f.write("mh-legacy-halves")
+    assert bands_scheme() == dedup.BANDS_SCHEME
+
+    # resume under a newer scheme, on a grown input
+    monkeypatch.setattr(dedup, "BANDS_SCHEME", "mh-next-scheme")
     # a rebuild rewrites the marker, replacing this sentinel content
     bands_marker = os.path.join(out, "_committed_bands")
     with open(bands_marker, "w") as f:
         f.write("sentinel")
     src.write.mode("overwrite").parquet(f"{inp}/documents.parquet")
     s2 = main(["--input", inp, "--output", out])
-    assert open(scheme_path).read() == BANDS_SCHEME
+    assert bands_scheme() == "mh-next-scheme"
     assert open(bands_marker).read() != "sentinel"
 
     out_ref = str(tmp_path / "kb_ref")

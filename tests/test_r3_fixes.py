@@ -273,11 +273,11 @@ def test_stage_cache_key_is_content_not_mtime(tmp_path):
 
 
 def test_ann_cache_keys_on_embeddings_not_documents(tmp_path):
-    """The ANN table is BUILT from embeddings.parquet, so its cache key
-    must track that file: a changed embeddings table with an unchanged
-    documents table must re-key (was: stale committed ANN served against
-    fresh query vectors), and vice versa a documents-only change must
-    NOT invalidate the ANN cache."""
+    """The ANN table is BUILT from embeddings.parquet, so its resume
+    identity must track that file: a changed embeddings table with an
+    unchanged documents table must rebuild it (was: stale committed ANN
+    served against fresh query vectors), and vice versa a
+    documents-only change must NOT invalidate the ANN table."""
     import __spark_entry__ as entry
 
     sf = tmp_path / "sf"
@@ -285,17 +285,62 @@ def test_ann_cache_keys_on_embeddings_not_documents(tmp_path):
         os.makedirs(sf / name)
         (sf / name / "part-0.parquet").write_bytes(b"v1-" + name.encode())
 
-    ann1 = entry._stage_cache_dir(str(sf), "ann", src_name="embeddings.parquet")
-    chunks1 = entry._stage_cache_dir(str(sf), "chunks")
+    ann1 = entry._serving_identity(str(sf), "ann")
+    chunks1 = entry._serving_identity(str(sf), "chunks")
 
     (sf / "embeddings.parquet" / "part-0.parquet").write_bytes(b"v2-emb")
-    ann2 = entry._stage_cache_dir(str(sf), "ann", src_name="embeddings.parquet")
+    ann2 = entry._serving_identity(str(sf), "ann")
     assert ann1 != ann2
-    assert entry._stage_cache_dir(str(sf), "chunks") == chunks1
+    assert entry._serving_identity(str(sf), "chunks") == chunks1
 
     (sf / "documents.parquet" / "part-0.parquet").write_bytes(b"v2-docs")
-    assert (
-        entry._stage_cache_dir(str(sf), "ann", src_name="embeddings.parquet")
-        == ann2
+    assert entry._serving_identity(str(sf), "ann") == ann2
+    assert entry._serving_identity(str(sf), "chunks") != chunks1
+
+
+def test_committed_chunks_rebuilds_on_same_mtime_content_change(
+    spark, tmp_path
+):
+    """The driver's committed chunks table is served from the cache
+    while its documents.parquet is unchanged, and rebuilt once that
+    input changes content, even when the regeneration keeps the
+    mtime."""
+    import __spark_entry__ as entry
+    from src_to_kb_spark.runtime.checkpoint import is_committed
+
+    sf = str(tmp_path / "sf")
+    docs = os.path.join(sf, "documents.parquet")
+    src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    src.filter("doc_id < 20").coalesce(1).write.parquet(docs)
+    part = next(
+        os.path.join(docs, f) for f in os.listdir(docs)
+        if f.endswith(".parquet")
     )
-    assert entry._stage_cache_dir(str(sf), "chunks") != chunks1
+    st = os.stat(part)
+
+    base = entry._serving_root(sf)
+    marker = os.path.join(base, "_committed_chunks")
+    n1 = entry._committed_chunks(spark, sf).count()
+    assert is_committed(base, "chunks", entry._serving_identity(sf, "chunks"))
+    # served from the committed table: the marker is not rewritten
+    with open(marker, "w") as f:
+        f.write("sentinel")
+    assert entry._committed_chunks(spark, sf).count() == n1
+    assert open(marker).read() == "sentinel"
+
+    # regenerate with other content into the same part file, same mtime
+    tmp = str(tmp_path / "regen")
+    src.filter("doc_id >= 20 AND doc_id < 30").coalesce(1).write.parquet(tmp)
+    new_part = next(
+        os.path.join(tmp, f) for f in os.listdir(tmp) if f.endswith(".parquet")
+    )
+    os.replace(new_part, part)
+    os.remove(os.path.join(docs, f".{os.path.basename(part)}.crc"))
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns))
+    rebuilt = entry._committed_chunks(spark, sf)
+    assert open(marker).read() != "sentinel"
+    assert {r["doc_uid"] for r in rebuilt.select("doc_uid").collect()} == {
+        r["doc_uid"]
+        for r in entry.chunk_documents(entry._docs(spark, sf), 1000, 200)
+        .select("doc_uid").collect()
+    }

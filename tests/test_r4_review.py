@@ -315,8 +315,10 @@ def test_job_size_gated_page_is_not_a_phantom_delta(spark, tmp_path):
 def test_job_param_change_invalidates_derived_stages(spark, tmp_path):
     """Re-running the same --output with a different
     --neardup-threshold must rebuild the near-dup family instead of
-    serving the old-threshold pair table."""
+    serving the old-threshold pair table, and a different --chunk-size
+    must rebuild chunks and triples; every other stage resumes."""
     from jobs.run_kg_pipeline import main as job_main
+    from src_to_kb_spark.runtime.kb import STAGES
 
     src = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -327,28 +329,33 @@ def test_job_param_change_invalidates_derived_stages(spark, tmp_path):
     job_main(["--input", inp, "--output", out,
               "--neardup-threshold", "0.9"])
 
-    # a rebuilt stage rewrites its marker: sentinel content written
-    # before a re-run survives only where nothing was rebuilt
-    def mark(*stages):
-        for stage in stages:
+    def rerun(*params):
+        """Stages the run rebuilt: a rebuilt stage rewrites its marker,
+        so sentinel content written before the run survives only
+        where nothing was rebuilt."""
+        for stage in STAGES:
             with open(os.path.join(out, f"_committed_{stage}"), "w") as f:
                 f.write("sentinel")
+        job_main(["--input", inp, "--output", out, *params])
+        rebuilt = set()
+        for stage in STAGES:
+            with open(os.path.join(out, f"_committed_{stage}")) as f:
+                if f.read() != "sentinel":
+                    rebuilt.add(stage)
+        return rebuilt
 
-    def rebuilt(stage):
-        with open(os.path.join(out, f"_committed_{stage}")) as f:
-            return f.read() != "sentinel"
+    def identity(stage):
+        with open(os.path.join(out, f"_metrics_{stage}.json")) as f:
+            return json.load(f)["identity"]
 
-    mark("neardup_pairs", "linked", "chunks")
-    job_main(["--input", inp, "--output", out,
-              "--neardup-threshold", "0.1"])
-    # near-dup family rebuilt under the new threshold...
-    assert rebuilt("neardup_pairs")
-    # ...while threshold-independent stages resumed untouched
-    assert not rebuilt("linked") and not rebuilt("chunks")
-    with open(os.path.join(out, "_scheme_params")) as f:
-        assert json.load(f)["neardup_threshold"] == 0.1
+    # near-dup family rebuilt under the new threshold, the
+    # threshold-independent stages resumed untouched
+    assert rerun("--neardup-threshold", "0.1") == {
+        "neardup_pairs", "components", "triples"}
+    assert identity("neardup_pairs")["neardup_threshold"] == 0.1
     # identical-params rerun: nothing rebuilds
-    mark("neardup_pairs")
-    job_main(["--input", inp, "--output", out,
-              "--neardup-threshold", "0.1"])
-    assert not rebuilt("neardup_pairs")
+    assert rerun("--neardup-threshold", "0.1") == set()
+    # a chunk-param change rebuilds chunks and triples only
+    assert rerun("--neardup-threshold", "0.1", "--chunk-size", "500") == {
+        "chunks", "triples"}
+    assert identity("chunks")["chunk_size"] == 500

@@ -199,15 +199,16 @@ def test_iceberg_stage_roundtrip(spark, tmp_path):
 
 
 def test_job_table_layer_change_invalidates_everything(spark, tmp_path):
-    """The physical table layer (--table-format/--table-prefix) is part
-    of the resume identity: a _committed marker written by a parquet
-    run says nothing about Iceberg tables under a prefix (and vice
-    versa), so a layer change must invalidate ALL stages — while a
-    pre-round-5 params file (no format keys) must keep reading as the
-    parquet era and resume untouched."""
+    """The physical table layer (--table-format/--table-prefix) heads
+    every stage's resume identity: a _committed marker written by a
+    parquet run says nothing about Iceberg tables under a prefix (and
+    vice versa), so a layer change must invalidate ALL stages.  A
+    sidecar that records no identity (a KB written before identities
+    existed) is not trusted either: every stage rebuilds once."""
     import json
 
     from jobs.run_kg_pipeline import main as job_main
+    from src_to_kb_spark.runtime.kb import STAGES
 
     src = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -217,10 +218,22 @@ def test_job_table_layer_change_invalidates_everything(spark, tmp_path):
     out = str(tmp_path / "kb")
     job_main(["--input", inp, "--output", out])
 
-    params_path = os.path.join(out, "_scheme_params")
-    with open(params_path) as f:
-        params = json.load(f)
-    assert params["table_format"] == "parquet"
+    def sidecar(stage):
+        return os.path.join(out, f"_metrics_{stage}.json")
+
+    def edit_identities(edit):
+        for stage in STAGES:
+            with open(sidecar(stage)) as f:
+                m = json.load(f)
+            edit(m)
+            with open(sidecar(stage), "w") as f:
+                json.dump(m, f)
+
+    def identity(stage):
+        with open(sidecar(stage)) as f:
+            return json.load(f)["identity"]
+
+    assert all(identity(st)["table_format"] == "parquet" for st in STAGES)
 
     # a rebuilt stage rewrites its marker: sentinel content written
     # before a re-run survives only where nothing was rebuilt
@@ -233,20 +246,48 @@ def test_job_table_layer_change_invalidates_everything(spark, tmp_path):
         with open(os.path.join(out, f"_committed_{stage}")) as f:
             return f.read() != "sentinel"
 
-    # pre-round-5 sidecar (no format keys) == parquet era: no rebuild
-    legacy = {k: v for k, v in params.items()
-              if k not in ("table_format", "table_prefix")}
-    with open(params_path, "w") as f:
-        json.dump(legacy, f)
-    mark("documents", "triples")
+    # sidecars recording no identity: everything rebuilds
+    edit_identities(lambda m: m.pop("identity"))
+    mark(*STAGES)
     job_main(["--input", inp, "--output", out])
-    assert not rebuilt("documents") and not rebuilt("triples")
+    assert all(rebuilt(st) for st in STAGES)
 
-    # sidecar claiming a DIFFERENT layer: everything rebuilds
-    with open(params_path, "w") as f:
-        json.dump({**params, "table_format": "iceberg",
-                   "table_prefix": "kb.other"}, f)
+    # sidecars claiming a DIFFERENT layer: everything rebuilds
+    edit_identities(lambda m: m["identity"].update(
+        table_format="iceberg", table_prefix="kb.other"))
+    mark(*STAGES)
     job_main(["--input", inp, "--output", out])
-    assert rebuilt("documents") and rebuilt("triples")
-    with open(params_path) as f:
-        assert json.load(f)["table_format"] == "parquet"
+    assert all(rebuilt(st) for st in STAGES)
+    assert all(identity(st)["table_format"] == "parquet" for st in STAGES)
+
+    # same layer again: nothing rebuilds
+    mark(*STAGES)
+    job_main(["--input", inp, "--output", out])
+    assert not any(rebuilt(st) for st in STAGES)
+
+
+def test_overwrite_crash_leaves_no_stale_commit(spark, tmp_path, monkeypatch):
+    """An overwrite under identity B that dies mid-write must leave the
+    stage uncommitted under identity A as well: a later run back on A's
+    parameters would otherwise trust a half-written table."""
+    import pytest
+
+    from src_to_kb_spark.runtime import checkpoint
+
+    out = str(tmp_path / "kb")
+    os.makedirs(out)
+    docs = spark.range(10).withColumnRenamed("id", "url")
+    a, b = {"chunk_size": 1000}, {"chunk_size": 500}
+    write_stage(docs, out, "chunks", identity=a)
+    assert is_committed(out, "chunks", a)
+    assert not is_committed(out, "chunks", b)
+    assert not is_committed(out, "chunks")
+
+    def crash(self, *args, **kwargs):
+        raise RuntimeError("executor lost mid-write")
+
+    monkeypatch.setattr(checkpoint.ParquetFormat, "write", crash)
+    with pytest.raises(RuntimeError, match="mid-write"):
+        write_stage(docs, out, "chunks", identity=b)
+    assert not is_committed(out, "chunks", a)
+    assert not is_committed(out, "chunks", b)
