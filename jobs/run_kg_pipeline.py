@@ -12,15 +12,18 @@ Usage (local smoke):
 
 Each stage writes its own parquet table under --output with a
 ``_committed_<stage>`` marker and per-partition lineage metrics
-(``_metrics_<stage>.json``).  Re-running with the same --output resumes:
-committed stages are re-read, uncommitted input keys are recomputed via
-anti-join (north_rule: "resumable from checkpoint with per-partition
-lineage + metrics").  A stage counts as committed only under the
-identity it was built with, which its metrics sidecar records: the
-table layer plus the parameters of every stage it derives from.  So
---chunk-size/--overlap rebuild chunks and triples, --neardup-threshold
-or a new band scheme the near-dup family, and --table-format/
---table-prefix every stage.  Resume cost is O(delta), not O(corpus):
+(``_metrics_<stage>.json``: rows and bytes per write task, read from
+the files the write produced).  ``summary.json`` takes its row counts
+from the committed tables' file metadata, so neither the metrics nor
+the summary launch a Spark job.  Re-running with the same --output
+resumes: committed stages are re-read, uncommitted input keys are
+recomputed via anti-join (north_rule: "resumable from checkpoint with
+per-partition lineage + metrics").  A stage counts as committed only
+under the identity it was built with, which its metrics sidecar
+records: the table layer plus the parameters of every stage it derives
+from.  So --chunk-size/--overlap rebuild chunks and triples,
+--neardup-threshold or a new band scheme the near-dup family, and
+--table-format/--table-prefix every stage.  Resume cost is O(delta), not O(corpus):
 per-doc stages (documents, chunks, linked, bands) append rows derived from the
 new docs only, near-dup pairs come from joining the delta's bands
 against the committed bands table, and only the genuinely global
@@ -286,7 +289,7 @@ def main(argv: list[str] | None = None) -> dict:
                 read("components"), delta_pairs
             ).localCheckpoint()
             write(updated, "components")
-        return pairs, stage(
+        return stage(
             "components", lambda: canonicalize.connected_components(pairs)
         )
 
@@ -296,10 +299,10 @@ def main(argv: list[str] | None = None) -> dict:
         f_comp = ex.submit(mk_components)
         chunks = f_chunks.result()
         linked = f_linked.result()
-        pairs, components = f_comp.result()
+        components = f_comp.result()
     # partitioned by predicate: a query touching one predicate
     # (e.g. all same_as edges) scans one directory, not the table
-    triples = stage(
+    stage(
         "triples",
         lambda: pipeline.triples_of(documents, linked, components, chunks),
         partition_by=["pred"],
@@ -308,15 +311,13 @@ def main(argv: list[str] | None = None) -> dict:
     if os.path.exists(pending_marker):
         os.remove(pending_marker)
 
+    # row counts from the committed tables' file metadata: no Spark job
     summary = {
-        "documents": documents.count(),
-        "chunks": chunks.count(),
-        "linked": linked.count(),
-        "neardup_pairs": pairs.count(),
-        "components": components.count(),
-        "triples": triples.count(),
-        "stages": ckpt.run_metrics(args.output),
+        name: fmt.row_count(spark, name)
+        for name in ("documents", "chunks", "linked", "neardup_pairs",
+                     "components", "triples")
     }
+    summary["stages"] = ckpt.run_metrics(args.output)
     with open(os.path.join(args.output, "summary.json"), "w") as f:
         json.dump(summary, f, indent=1)
     print(json.dumps({k: v for k, v in summary.items() if k != "stages"}))

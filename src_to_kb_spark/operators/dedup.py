@@ -10,7 +10,8 @@ UHUGEINT-mod — pinned by the oracle rows and unit tests).
 
 * :func:`exact_duplicates` — hash-groupBy on the content checksum.
 * :func:`shingles` / :func:`shingle_hash_values` /
-  :func:`neardup_candidate_pairs` — MinHash + LSH banding:
+  :func:`band_signature_rows` / :func:`candidate_pairs_from_bands` —
+  MinHash + LSH banding:
   3-token shingles (lead-window construction), K minhashes per doc
   from the universal family h_j(x) = (A_j·x + B_j) mod 2^64 over the
   shingle's md5-prefix, band signatures, pairs sharing any band.
@@ -289,11 +290,15 @@ def shingle_hash_values(sh: DataFrame) -> DataFrame:
     )
 
 
-def _band_rows(feats: DataFrame) -> DataFrame:
-    """(key, band, band_sig) from the features table (band index =
-    position in the bands array); docs with no shingles drop out."""
-    return feats.filter(F.col("bands").isNotNull()).select(
-        "key", F.posexplode("bands").alias("band", "band_sig")
+def _band_rows(df: DataFrame, key: str, bands) -> DataFrame:
+    """(key, band, band_sig) from ``df``'s ``key`` column and a bands
+    array column (band index = position in the array); docs with no
+    shingles (null or empty bands) drop out.  Pass a UDF call as
+    ``bands`` itself, not as an aliased column of ``df``: Spark infers
+    a non-empty filter under the explode and pushes it through the
+    alias, which evaluates the UDF a second time over every row."""
+    return df.select(
+        F.col(key).alias("key"), F.posexplode(bands).alias("band", "band_sig")
     )
 
 
@@ -311,12 +316,6 @@ def _band_pairs(bands: DataFrame) -> DataFrame:
         .select(F.col("a.key").alias("key_a"), F.col("b.key").alias("key_b"))
         .distinct()
     )
-
-
-def neardup_candidate_pairs(
-    docs: DataFrame, key_col: str = "url", text_col: str = "text"
-) -> DataFrame:
-    return _band_pairs(_band_rows(shingle_features(docs, key_col, text_col)))
 
 
 def make_intersection_udf():
@@ -347,12 +346,7 @@ def band_signature_rows(
     table by the pipeline job so a documents DELTA only bands the new
     docs and joins against these committed rows."""
     bands_udf = make_bands_udf()
-    return _band_rows(
-        docs.select(
-            F.col(key_col).alias("key"),
-            bands_udf(F.col(text_col)).alias("bands"),
-        )
-    )
+    return _band_rows(docs, key_col, bands_udf(F.col(text_col)))
 
 
 def candidate_pairs_from_bands(bands: DataFrame) -> DataFrame:
@@ -489,8 +483,9 @@ def neardup_pairs(
         F.col(key_col).alias("key"),
         bf_udf(F.col(text_col)).alias("f"),
     ).localCheckpoint(eager=False)
-    bands_df = feats.select("key", F.col("f.bands").alias("bands"))
-    cands = _band_pairs(_band_rows(bands_df)).localCheckpoint(eager=False)
+    cands = _band_pairs(_band_rows(feats, "key", "f.bands")).localCheckpoint(
+        eager=False
+    )
     cand_sets = (
         feats.select("key", F.col("f.hv").alias("sh"))
         .join(_cand_keys(cands), "key", "left_semi")

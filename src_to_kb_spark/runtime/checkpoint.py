@@ -3,13 +3,15 @@
 per-partition lineage + metrics").
 
 Every pipeline stage writes to its own table; a ``_metrics`` sidecar
-records per-partition row counts, wall time and the stage's resume
-IDENTITY (the parameters and inputs it was built under), and a
-``_committed`` marker makes the write atomic-observable.  A stage is
-reusable iff its marker exists AND its sidecar records the identity
-the caller asks for (:func:`is_committed`) — the one resume rule for
-the pipeline job and the driver's serving tables.  Restart =
-anti-join the committed keys.
+records the write's per-partition rows and bytes, wall time and the
+stage's resume IDENTITY (the parameters and inputs it was built
+under), and a ``_committed`` marker makes the write atomic-observable.
+The rows and bytes come from the files the write itself produced
+(parquet footers; the Iceberg snapshot summary) — recording them
+launches no Spark job.  A stage is reusable iff its marker exists AND
+its sidecar records the identity the caller asks for
+(:func:`is_committed`) — the one resume rule for the pipeline job and
+the driver's serving tables.  Restart = anti-join the committed keys.
 
 The PHYSICAL table layer is pluggable (:class:`ParquetFormat` /
 :class:`IcebergFormat`, ``--table-format`` on the pipeline job).  The
@@ -33,10 +35,38 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
+from typing import NamedTuple
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+class Written(NamedTuple):
+    """What one stage write added: the marker's commit reference (None:
+    use the commit time), ``(partition_id, n_rows, bytes)`` per write
+    task, and the totals."""
+
+    commit_ref: str | None
+    partitions: list[tuple[int, int, int]]
+    n_rows: int
+    bytes_written: int
+
+
+_PART = re.compile(r"part-(\d+)")
+
+
+def _part_files(table_dir: str) -> list[str]:
+    """The parquet part files under ``table_dir``, at any depth (a
+    ``partitionBy`` write nests them in ``key=value`` dirs); hidden
+    and ``_``-prefixed entries are skipped, as Spark's reader does."""
+    out = []
+    for d, dirs, files in os.walk(table_dir):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        out += [os.path.join(d, f) for f in files if f.startswith("part-")]
+    return out
 
 
 class ParquetFormat:
@@ -56,15 +86,40 @@ class ParquetFormat:
         stage: str,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
-    ) -> str | None:
+    ) -> Written:
+        """Write ``df`` and measure the part files this call added
+        (an append: those not there before) from their footers and
+        sizes on the driver.  A task's files (one per ``partitionBy``
+        value) sum under its ``part-NNNNN`` index.  The result is
+        returned, not kept: one format object serves concurrent
+        writers."""
+        path = os.path.join(self.out_dir, stage)
+        before = set(_part_files(path)) if mode == "append" else set()
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self.out_dir, stage))
-        return None
+        writer.parquet(path)
+        per_task: dict[int, tuple[int, int]] = {}
+        for f in _part_files(path):
+            if f in before:
+                continue
+            pid = int(_PART.match(os.path.basename(f)).group(1))
+            rows, size = per_task.get(pid, (0, 0))
+            per_task[pid] = (rows + pq.read_metadata(f).num_rows,
+                             size + os.path.getsize(f))
+        parts = [(pid, r, b) for pid, (r, b) in sorted(per_task.items())]
+        return Written(None, parts, sum(p[1] for p in parts),
+                       sum(p[2] for p in parts))
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.parquet(os.path.join(self.out_dir, stage))
+
+    def row_count(self, spark: SparkSession, stage: str) -> int:
+        """The stage table's rows, summed from its part files' footers."""
+        return sum(
+            pq.read_metadata(f).num_rows
+            for f in _part_files(os.path.join(self.out_dir, stage))
+        )
 
 
 class IcebergFormat:
@@ -104,13 +159,27 @@ class IcebergFormat:
     def _ident(self, stage: str) -> str:
         return f"{self.table_prefix}.{stage}"
 
+    def _head(self, spark: SparkSession, stage: str, *keys: str):
+        """``snapshot_id`` and the ``keys`` of the snapshot summary of
+        the table's CURRENT snapshot (the `main` branch head in the
+        `refs` metadata table) — metadata only, no data scan."""
+        ident = self._ident(stage)
+        cols = "".join(f", s.summary['{k}']" for k in keys)
+        return spark.sql(
+            f"SELECT r.snapshot_id{cols} FROM {ident}.refs r "
+            f"JOIN {ident}.snapshots s ON s.snapshot_id = r.snapshot_id "
+            "WHERE r.name = 'main'"
+        ).first()
+
     def write(
         self,
         df: DataFrame,
         stage: str,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
-    ) -> str | None:
+    ) -> Written:
+        """Write ``df`` as one snapshot; its added records and file
+        bytes come from the snapshot summary (no per-task breakdown)."""
         ident = self._ident(stage)
         spark = df.sparkSession
         w = df.writeTo(ident)
@@ -120,23 +189,29 @@ class IcebergFormat:
             if partition_by:
                 w = w.partitionedBy(*[F.col(c) for c in partition_by])
             w.createOrReplace()
-        # The table's CURRENT snapshot (the `main` branch head in the
-        # `refs` metadata table), not `snapshots ORDER BY committed_at`:
-        # committed_at has millisecond granularity, so a timestamp sort
-        # is ambiguous even in the single-writer case.  Each stage
-        # table has ONE writer (this job) by design, so the branch head
-        # read here IS this write's commit; under an out-of-contract
-        # concurrent writer the head could advance between commit and
-        # read — a far narrower window than the timestamp sort, and
-        # "the last committed snapshot checkpoint" (the resume
-        # contract) is still what the marker records.
-        row = spark.sql(
-            f"SELECT snapshot_id FROM {ident}.refs WHERE name = 'main'"
-        ).first()
-        return f"snapshot={row[0]}" if row else None
+        # The table's CURRENT snapshot (_head), not `snapshots ORDER BY
+        # committed_at`: committed_at has millisecond granularity, so a
+        # timestamp sort is ambiguous even in the single-writer case.
+        # Each stage table has ONE writer (this job) by design, so the
+        # branch head read here IS this write's commit; under an
+        # out-of-contract concurrent writer the head could advance
+        # between commit and read — a far narrower window than the
+        # timestamp sort, and "the last committed snapshot checkpoint"
+        # (the resume contract) is still what the marker records.
+        row = self._head(spark, stage, "added-records", "added-files-size")
+        if row is None:
+            return Written(None, [], 0, 0)
+        return Written(f"snapshot={row[0]}", [], int(row[1] or 0),
+                       int(row[2] or 0))
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.table(self._ident(stage))
+
+    def row_count(self, spark: SparkSession, stage: str) -> int:
+        """The stage table's rows: its current snapshot's
+        ``total-records``."""
+        row = self._head(spark, stage, "total-records")
+        return int(row[1] or 0) if row else 0
 
 
 def write_stage(
@@ -152,8 +227,9 @@ def write_stage(
     it under ``identity`` (a JSON-able dict of whatever the stage was
     built from; see :func:`is_committed`).
 
-    Returns the metrics dict: {stage, wall_sec, n_rows, partitions:
-    [{partition_id, n_rows}, ...], identity}.
+    Returns the metrics dict: {stage, mode, format, wall_sec, n_rows,
+    bytes_written, partitions: [{partition_id, n_rows, bytes_written},
+    ...], identity}.
 
     An overwrite removes the stage's marker BEFORE it writes, so a crash
     mid-write leaves the stage uncommitted under every identity — never
@@ -161,40 +237,30 @@ def write_stage(
     extends a stage committed under the same identity and keeps its
     marker; the job's ``_delta_pending`` marker covers that window.
 
-    ``mode='overwrite'`` reads the WRITTEN table back for the counts —
-    O(what was just written).  ``mode='append'`` (the resume path's
-    delta writes) counts the DELTA DataFrame instead: re-reading the
-    whole table would cost an O(corpus) scan per per-document delta
-    append, turning the documented O(delta) resume into O(corpus) —
-    the sidecar then describes THIS write (``"mode": "append"``), i.e.
-    the lineage of the increment, not the cumulative table.
+    The rows and bytes are what ``fmt.write`` reports it added, one
+    entry per write task — so the only Spark job is the write itself.
+    An append's sidecar (``"mode": "append"``, the resume path's delta
+    writes) describes the increment, not the cumulative table: O(delta)
+    to record, like the write.  An Iceberg write reports totals only
+    (``partitions`` is empty).
     """
     fmt = fmt or ParquetFormat(out_dir)
     if mode != "append":
         uncommit(out_dir, stage)
     t0 = time.time()
-    commit_ref = fmt.write(df, stage, mode=mode, partition_by=partition_by)
+    w = fmt.write(df, stage, mode=mode, partition_by=partition_by)
     wall = time.time() - t0
-
-    counted = (
-        df if mode == "append" else fmt.read(df.sparkSession, stage)
-    )
-    per_part = (
-        counted.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("n_rows"))
-        .collect()
-    )
     metrics = {
         "stage": stage,
         "mode": mode,
         "format": fmt.name,
         "wall_sec": round(wall, 3),
-        "n_rows": int(sum(r["n_rows"] for r in per_part)),
-        "partitions": sorted(
-            ({"partition_id": r["partition_id"], "n_rows": r["n_rows"]}
-             for r in per_part),
-            key=lambda d: d["partition_id"],
-        ),
+        "n_rows": w.n_rows,
+        "bytes_written": w.bytes_written,
+        "partitions": [
+            {"partition_id": pid, "n_rows": n, "bytes_written": b}
+            for pid, n, b in w.partitions
+        ],
         "identity": identity,
     }
     with open(os.path.join(out_dir, f"_metrics_{stage}.json"), "w") as f:
@@ -202,7 +268,7 @@ def write_stage(
     with open(os.path.join(out_dir, f"_committed_{stage}"), "w") as f:
         # parquet: commit wall time; iceberg: the committed snapshot id
         # — the marker IS the "last committed snapshot checkpoint"
-        f.write(commit_ref or str(int(time.time())))
+        f.write(w.commit_ref or str(int(time.time())))
     return metrics
 
 

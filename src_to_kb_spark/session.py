@@ -18,6 +18,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """48g, or half of physical memory where that is less: a heap
+    larger than the host lets the JVM grow past what the host has
+    instead of collecting, until the kernel kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "src_to_kb_spark",
     cpus: int | None = None,
@@ -53,7 +61,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_heap()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

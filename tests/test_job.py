@@ -18,9 +18,18 @@ from jobs.run_kg_pipeline import main
 from .conftest import SF_SMOKE
 
 
+def _assert_summary_is_the_tables(spark, out, summary):
+    from src_to_kb_spark.runtime.checkpoint import read_stage
+
+    for stage in ("documents", "chunks", "linked", "neardup_pairs",
+                  "components", "triples"):
+        assert summary[stage] == read_stage(spark, out, stage).count(), stage
+
+
 def test_job_runs_and_resumes(spark, tmp_path):
     out = str(tmp_path / "kb")
     s1 = main(["--input", SF_SMOKE, "--output", out])
+    _assert_summary_is_the_tables(spark, out, s1)
     assert s1["triples"] > 0
     assert s1["documents"] == 500
     for stage in ["documents", "chunks", "linked", "neardup_pairs",
@@ -34,11 +43,13 @@ def test_job_runs_and_resumes(spark, tmp_path):
     s2 = main(["--input", SF_SMOKE, "--output", out])
     assert s2["triples"] == s1["triples"]
     assert os.path.getmtime(os.path.join(out, "_committed_triples")) == mtime
+    _assert_summary_is_the_tables(spark, out, s2)
 
     # partial resume: drop one stage marker -> only that stage recomputed
     os.remove(os.path.join(out, "_committed_triples"))
     s3 = main(["--input", SF_SMOKE, "--output", out])
     assert s3["triples"] == s1["triples"]
+    _assert_summary_is_the_tables(spark, out, s3)
 
 
 def _triple_set(spark, out):
@@ -63,6 +74,7 @@ def test_job_resume_propagates_input_delta(spark, tmp_path):
     src.write.mode("overwrite").parquet(f"{inp}/documents.parquet")
     s2 = main(["--input", inp, "--output", out])
     assert s2["documents"] == 500
+    _assert_summary_is_the_tables(spark, out, s2)
 
     out_full = str(tmp_path / "kb_full")
     s3 = main(["--input", inp, "--output", out_full])

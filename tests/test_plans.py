@@ -220,3 +220,36 @@ def test_linking_variants_agree(spark):
     a = {tuple(r) for r in link_mentions(m, gaz).collect()}
     b = {tuple(r) for r in link_mentions_windowed(m, gaz).collect()}
     assert a == b and len(a) > 0
+
+
+def test_per_document_stages_evaluate_each_udf_once(spark):
+    """Each Python UDF of the job's per-document stage frames is
+    evaluated by exactly one ArrowEvalPython node: a second node runs
+    the UDF over every row again."""
+    import re
+    from collections import Counter
+
+    from src_to_kb_spark import pipeline
+
+    # a frame served from a cached plan (run_pipeline persists its
+    # documents) prints the cached adaptive plan twice, initial and
+    # final: read the plans with nothing cached
+    spark.catalog.clearCache()
+    pages = load_pages(spark, SF_SMOKE, keep_keys=False)
+    docs = pipeline.documents_of(pages).localCheckpoint()
+    frames = {
+        "documents_of": pipeline.documents_of(pages),
+        "chunks_of": pipeline.chunks_of(docs, 1000, 200),
+        "linked_of": pipeline.linked_of(docs),
+        "bands_of": pipeline.bands_of(docs),
+    }
+    for name, df in frames.items():
+        nodes = [
+            set(re.findall(r"(\w+)\(", line.split("ArrowEvalPython", 1)[1]
+                           .split("]", 1)[0]))
+            for line in _plan(df).splitlines()
+            if "ArrowEvalPython" in line
+        ]
+        per_udf = Counter(u for node in nodes for u in node)
+        assert per_udf, name
+        assert all(n == 1 for n in per_udf.values()), (name, per_udf)

@@ -19,17 +19,59 @@ from src_to_kb_spark.sources.pages import synthetic_pages
 from src_to_kb_spark.streaming.ingest import run_ingest_once
 
 
+def _part_files(table_dir):
+    return {
+        os.path.join(d, f)
+        for d, _, files in os.walk(table_dir)
+        for f in files
+        if f.startswith("part-")
+    }
+
+
+def _assert_sidecar_is_the_write(spark, m, files):
+    """``m`` describes exactly ``files``: the rows Spark reads from
+    them, the sum of their sizes, and per-task entries that add up."""
+    assert files
+    assert m["n_rows"] == spark.read.parquet(*sorted(files)).count()
+    assert m["bytes_written"] == sum(os.path.getsize(f) for f in files)
+    assert m["n_rows"] == sum(p["n_rows"] for p in m["partitions"])
+    assert m["bytes_written"] == sum(
+        p["bytes_written"] for p in m["partitions"]
+    )
+
+
 def test_write_stage_metrics_and_resume(spark, tmp_path):
     out = str(tmp_path / "kb")
     os.makedirs(out, exist_ok=True)
     pages = synthetic_pages(spark, n=60)
     docs = extract_pages(pages)
+    table = os.path.join(out, "documents")
 
     m = write_stage(docs, out, "documents")
     assert is_committed(out, "documents")
     assert m["n_rows"] == 60
     assert sum(p["n_rows"] for p in m["partitions"]) == 60
     assert all(p["n_rows"] > 0 for p in m["partitions"])
+    _assert_sidecar_is_the_write(spark, m, _part_files(table))
+
+    # an append records only the files it added
+    before = _part_files(table)
+    extra = extract_pages(synthetic_pages(spark, n=75)).join(
+        docs.select("url"), "url", "left_anti"
+    )
+    m2 = write_stage(extra, out, "documents", mode="append")
+    assert m2["mode"] == "append" and m2["n_rows"] == 15
+    _assert_sidecar_is_the_write(spark, m2, _part_files(table) - before)
+    # put the table back to the 60 docs the resume checks below expect
+    m = write_stage(docs, out, "documents")
+    _assert_sidecar_is_the_write(spark, m, _part_files(table))
+
+    # a partitioned write sums each task's files across the key dirs
+    mp = write_stage(docs, out, "by_lang", partition_by=["lang"])
+    assert mp["n_rows"] == 60
+    by_lang = _part_files(os.path.join(out, "by_lang"))
+    assert any(os.sep + "lang=" in f for f in by_lang)
+    _assert_sidecar_is_the_write(spark, mp, by_lang)
 
     # resume: committed keys are excluded from the delta
     delta = resume_delta(pages, spark, out, "documents", key="url")
@@ -39,8 +81,50 @@ def test_write_stage_metrics_and_resume(spark, tmp_path):
     delta2 = resume_delta(more, spark, out, "documents", key="url")
     assert delta2.count() == 20
 
-    assert [x["stage"] for x in run_metrics(out)] == ["documents"]
+    assert [x["stage"] for x in run_metrics(out)] == ["by_lang", "documents"]
     assert read_stage(spark, out, "documents").count() == 60
+
+
+def test_concurrent_stage_writes_record_their_own_files(spark, tmp_path):
+    """Stages written at once through one shared format object (as the
+    job's writer threads do) each record only their own files."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from src_to_kb_spark.runtime.checkpoint import ParquetFormat
+
+    out = str(tmp_path / "kb")
+    os.makedirs(out)
+    fmt = ParquetFormat(out)
+    frames = {"a": spark.range(0, 700, 1, 3), "b": spark.range(0, 40, 1, 5)}
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        futs = {name: ex.submit(write_stage, df, out, name, fmt=fmt)
+                for name, df in frames.items()}
+        ms = {name: f.result() for name, f in futs.items()}
+    assert ms["a"]["n_rows"] == 700 and ms["b"]["n_rows"] == 40
+    for name, m in ms.items():
+        _assert_sidecar_is_the_write(
+            spark, m, _part_files(os.path.join(out, name))
+        )
+        assert fmt.row_count(spark, name) == m["n_rows"]
+
+
+def test_write_stage_launches_only_the_write_job(spark, tmp_path):
+    """Recording a stage's metrics launches no Spark job of its own:
+    the write is the only job, in overwrite and in append mode."""
+    out = str(tmp_path / "kb")
+    os.makedirs(out)
+    sc = spark.sparkContext
+    df = spark.range(0, 200, 1, 4).withColumn("v", F.col("id") * 2)
+    try:
+        for i, mode in enumerate(("overwrite", "append")):
+            group = f"write-stage-jobs-{mode}-{i}"
+            sc.setJobGroup(group, mode)
+            m = write_stage(df, out, "numbers", mode=mode)
+            assert m["n_rows"] == 200
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert read_stage(spark, out, "numbers").count() == 400
 
 
 def test_streaming_ingest_matches_batch(spark, tmp_path):
